@@ -20,3 +20,7 @@ per-row Python UDFs and no driver-side materialization of data.
 """
 
 __version__ = "0.1.0"
+
+from . import zipcache
+
+zipcache.install()

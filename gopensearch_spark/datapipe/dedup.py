@@ -36,23 +36,25 @@ from pyspark.sql import types as T
 _MERSENNE = (1 << 61) - 1
 _SEED = 42
 
-# keyed MinHash-signature cache: (normalized plan, params) -> cached sigs.
+# keyed MinHash-signature cache: (normalized plan + input files, params) -> cached sigs.
 # Bounded to _SIG_CACHE_MAX live relations; evictions unpersist.
 _sig_cache: "dict[tuple, tuple[DataFrame, int]]" = {}  # ckey -> (cached sigs, row count)
 _SIG_CACHE_MAX = 2
 
 
-def _plan_key(df: DataFrame) -> str | None:
+def _plan_key(df: DataFrame) -> tuple[str, tuple[str, ...]] | None:
     """Semantic identity of a DataFrame: its analyzed plan with the
     per-instance expression ids (#123) stripped, so the SAME read+select
     reconstructed call-after-call (the bench/driver pattern) keys
-    identically. None (= uncacheable) if the internal API is absent
+    identically, plus its sorted input files (a file scan's plan string
+    omits the path, so two files of one schema would otherwise share a
+    key). None (= uncacheable) if the internal API is absent
     (e.g. Spark Connect)."""
     try:
         s = df._jdf.queryExecution().analyzed().toString()
     except Exception:
         return None
-    return re.sub(r"#\d+", "#", s)
+    return re.sub(r"#\d+", "#", s), tuple(sorted(df.inputFiles()))
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -511,7 +513,7 @@ def minhash_lsh_pairs(
     """
     assert num_perm % bands == 0
     r = num_perm // bands
-    # Signature cache keyed by (corpus plan, params): the num_perm x
+    # Signature cache keyed by (corpus plan + files, params): the num_perm x
     # shingles hash matrix is this operator's dominant cost, and it is a
     # pure function of the input relation — repeated calls over the same
     # corpus (bench reps, recall gates that pair an LSH pass with an

@@ -165,6 +165,14 @@ def _metric_exprs(ctx: CompileContext, aggs: dict[str, model.Aggregate]) -> list
     return exprs
 
 
+def _hit_field_names(src: list[str]) -> list[str]:
+    """A top_hits _source field is named by its leaf (user.name -> name),
+    as a plain select would name it; a leaf that two fields share keeps
+    its full dotted path, so neither value is lost."""
+    leaves = [c.split(".")[-1] for c in src]
+    return [c if leaves.count(leaf) > 1 else leaf for c, leaf in zip(src, leaves)]
+
+
 def _top_hits_arrays(
     ctx: CompileContext, filtered: DataFrame, keyc: Column,
     th_subs: dict[str, model.TopHits],
@@ -211,9 +219,12 @@ def _top_hits_arrays(
             sorted_fields = [s.field for s in th.sort]
         if ctx.id_col and ctx.id_col not in sorted_fields:
             ordcols.append(F.asc(ctx.id_col))  # deterministic total order
-        for c in src:
-            proj.append(F.col(c))
-        if ctx.id_col and ctx.id_col not in src:
+        # _source columns go through stable aliases: selecting a dotted
+        # field (user.name) names it by its leaf, which the hit struct
+        # below could not re-reference, and two leaves may collide
+        for i, c in enumerate(src):
+            proj.append(F.col(c).alias(f"__src_{i}"))
+        if ctx.id_col:
             proj.append(F.col(ctx.id_col))
         narrowed = ensure_parallelism(filtered.select(*proj), factor=1,
                                       bytes_per_partition=1 << 20)
@@ -226,7 +237,8 @@ def _top_hits_arrays(
             F.transform(
                 F.sort_array(F.collect_list(F.struct(
                     F.col("__rn").alias("rn"),
-                    F.struct(*[F.col(c) for c in src]).alias("hit"),
+                    F.struct(*[F.col(f"__src_{i}").alias(n)
+                               for i, n in enumerate(_hit_field_names(src))]).alias("hit"),
                 ))),
                 lambda x: x["hit"],
             ).alias(label)

@@ -33,6 +33,11 @@ from gopensearch_spark.dsl.aggs import compile_aggs
 from gopensearch_spark.dsl.compiler import CompileContext, compile_query, strip_keyword
 
 
+def _took_ms(t0: float) -> int:
+    """ES `took`: wall-clock ms since ``t0``, a ``time.monotonic()`` reading."""
+    return int((time.monotonic() - t0) * 1000)
+
+
 @dataclass
 class IndexSpec:
     df: DataFrame
@@ -592,6 +597,7 @@ class Engine:
         reassigns its loop variable); missing indices are created
         implicitly. Returns the BulkResponse shape the python bulk
         helper consumes."""
+        t0 = time.monotonic()
         lines = ndjson.splitlines() if isinstance(ndjson, str) else list(ndjson)
         docs = [json.loads(l) for l in lines if l.strip()]
         items: list[dict] = []
@@ -629,7 +635,7 @@ class Engine:
             # delete (and unknown ops): no doc line, nothing to do
         for idx in touched:  # one DataFrame rebuild per touched index
             self._rebuild_doc_index(idx)
-        return {"took": 1, "errors": False, "items": items}
+        return {"took": _took_ms(t0), "errors": False, "items": items}
 
     # --- document management (_delete_by_query etc.) ----------------------
     def _matching_relation(
@@ -656,6 +662,7 @@ class Engine:
         avgdl stats reflect the pre-delete corpus until a rebuild."""
         import dataclasses
 
+        t0 = time.monotonic()
         raw = json.loads(body) if isinstance(body, str) else (body or {})
         resolved, spec, hits = self._matching_relation(index, raw.get("query"))
         ids = hits.select(spec.id_col).distinct()
@@ -671,7 +678,7 @@ class Engine:
             self.indices[resolved] = dataclasses.replace(
                 spec, df=spec.df.join(ids, on=spec.id_col, how="left_anti")
             )
-        return {"took": 1, "total": n, "deleted": n, "failures": []}
+        return {"took": _took_ms(t0), "total": n, "deleted": n, "failures": []}
 
     _UPDATE_SCRIPT = re.compile(
         r"\s*ctx\._source\.([A-Za-z_][\w]*)\s*=\s*(.+?);?\s*$", re.S
@@ -686,6 +693,7 @@ class Engine:
         Python in the data path, numeric targets stored as double.
         DataFrame-backed indices only (doc-backed sources carry opaque
         JSON strings; reindex them into a typed relation first)."""
+        t0 = time.monotonic()
         raw = json.loads(body) if isinstance(body, str) else body
         script = raw.get("script", "")
         if isinstance(script, dict):
@@ -724,7 +732,7 @@ class Engine:
             .drop("__upd")
         )
         self.indices[resolved] = dataclasses.replace(spec, df=new_df)
-        return {"took": 1, "total": n, "updated": n, "failures": []}
+        return {"took": _took_ms(t0), "total": n, "updated": n, "failures": []}
 
     def reindex(self, body: str | dict) -> dict:
         """`POST /_reindex`: copy (optionally query-filtered) documents
@@ -737,6 +745,7 @@ class Engine:
         preserving ids. The destination must not already exist."""
         import dataclasses
 
+        t0 = time.monotonic()
         raw = json.loads(body) if isinstance(body, str) else body
         src = raw["source"]
         dest = raw["dest"]["index"]
@@ -751,13 +760,14 @@ class Engine:
                 r for r in self._doc_rows[resolved] if r[0] in keep
             ]
             self._rebuild_doc_index(dest)
-            return {"took": 1, "created": len(keep), "failures": []}
+            return {"took": _took_ms(t0), "created": len(keep), "failures": []}
         out = hits.select(*spec.df.columns)  # drop any scoring column
         self.indices[dest] = dataclasses.replace(
             spec, df=out, index_dir=None, text_field=None,
             extra_text_fields={},
         )
-        return {"took": 1, "created": out.count(), "failures": []}
+        n = out.count()
+        return {"took": _took_ms(t0), "created": n, "failures": []}
 
     # --- percolation (reverse search) --------------------------------------
     def register_percolator(self, index: str, query_id, query: dict) -> None:
@@ -1712,7 +1722,7 @@ class Engine:
 
     def search(self, index: str, body: str | dict) -> dict:
         """`POST /{index}/_search` -> ES-shaped response dict."""
-        t0 = time.time()
+        t0 = time.monotonic()
         index = index.split(",", 1)[0]  # multi-index degrades (server.go:38)
         # resolve aliases HERE so hits report the concrete `_index`
         # (ES's contract for reads through an alias); search_df's own
@@ -1756,7 +1766,7 @@ class Engine:
             rows=rows,
             agg_rows=agg_rows,
             id_col=spec.id_col,
-            took_ms=int((time.time() - t0) * 1000),
+            took_ms=_took_ms(t0),
         )
         if total is not None:
             resp["hits"]["total"] = {"value": total, "relation": "eq"}
@@ -2477,7 +2487,7 @@ class Engine:
         spec = self._spec(index)
         if not spec.index_dir:
             raise ValueError(f"index {index!r} has no full-text index")
-        t0 = time.time()
+        t0 = time.monotonic()
         scores = match_expr_scores(self.spark, spec.index_dir, expr).withColumnRenamed(
             "doc_id", "__ft_doc_id"
         )
@@ -2492,7 +2502,7 @@ class Engine:
             rows=hits.collect(),
             agg_rows={},
             id_col=spec.id_col,
-            took_ms=int((time.time() - t0) * 1000),
+            took_ms=_took_ms(t0),
         )
 
     def msearch(self, lines: list[dict], max_concurrency: int = 8) -> list[dict]:
@@ -2513,7 +2523,7 @@ class Engine:
             index, _af = self._resolve_index(index)
             if _af is not None:
                 body = self._alias_filtered_body(body, _af)
-            t0 = time.time()
+            t0 = time.monotonic()
             hits, aggs_out, d = self.search_df(index, body)
             reqs.append(
                 (index, hits, aggs_out, d,

@@ -1,6 +1,7 @@
-"""ES bulk/template protocol parity, driven by the REFERENCE'S OWN
-fixtures (reference pkg/server/testdata/bulk-1.ndjson +
-span.template.json) and reproducing the hit-count assertions of
+"""ES bulk/template protocol parity, driven by fixtures in the shape of
+the reference's own (reference pkg/server/testdata/bulk-1.ndjson +
+span.template.json; tests/fixtures/ holds hand-authored copies built
+from FIXTURES.md §2-4) and reproducing the hit-count assertions of
 reference pkg/server/sql_test.go:108-229 through the equivalent Python
 API (no HTTP layer — SURVEY.md §2.11)."""
 
@@ -11,7 +12,7 @@ import pytest
 
 from gopensearch_spark.dsl import Engine
 
-REF_TESTDATA = "/root/reference/pkg/server/testdata"
+REF_TESTDATA = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 @pytest.fixture(scope="module")

@@ -343,6 +343,34 @@ def test_minhash_signature_cache_hits_on_reconstructed_df(spark, tmp_path):
     assert calls["n"] == 2  # one per distinct (corpus, params) key
 
 
+def test_minhash_signature_cache_keys_on_input_files(spark, tmp_path, monkeypatch):
+    """Two single-file parquet inputs of one schema have the same plan
+    string (a file scan's plan omits its path); the second must not get
+    the first one's signatures, so cached pairs equal uncached ones."""
+    import gopensearch_spark.datapipe.dedup as D
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    paths = []
+    for f, (a, b) in enumerate([(0, 1), (2, 3)]):
+        rows = [(i, " ".join(f"{w}{f}{i}" for w in words)) for i in range(6)]
+        rows[b] = (b, rows[a][1] + " extra")  # one planted near-dup pair per file
+        paths.append(str(tmp_path / f"docs{f}.parquet"))
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(paths[-1])
+
+    def pairs(path):
+        out = minhash_lsh_pairs(spark.read.parquet(path), num_perm=32, bands=8, threshold=0.5)
+        return sorted(tuple(r) for r in out.collect())
+
+    monkeypatch.setattr(D, "_sig_cache", {})
+    cached = [pairs(p) for p in paths]
+    uncached = []
+    for p in paths:
+        monkeypatch.setattr(D, "_sig_cache", {})
+        uncached.append(pairs(p))
+    assert cached == uncached
+    assert [[r[:2] for r in got] for got in uncached] == [[(0, 1)], [(2, 3)]]
+
+
 def test_connected_components_self_loop_only_ids(spark):
     """ADVICE r4: an id appearing ONLY in self-pairs (a == b) must still
     come out as its own singleton cluster — the contract is 'every id in

@@ -174,3 +174,30 @@ def test_delete_index_drops_live_scrolls(spark):
     e.delete_index("sc")
     with pytest.raises(ValueError, match="unknown or cleared"):
         e.scroll(sid)
+
+
+def test_mutation_apis_report_timed_took(engine, monkeypatch):
+    """bulk, delete/update_by_query and reindex report `took` from a
+    wall-clock timer: a fake clock advancing 0.75 s per reading between
+    start and end gives 750 ms; the real clock a non-negative int."""
+    import types
+
+    import gopensearch_spark.dsl.engine as E
+
+    def calls():
+        return [
+            lambda: engine.bulk(['{"index": {"_index": "logs"}}', '{"msg": "hi"}']),
+            lambda: engine.update_by_query("events", {
+                "query": {"term": {"event_type": "error"}},
+                "script": {"source": "ctx._source.value = 1"}}),
+            lambda: engine.reindex({"source": {"index": "events"},
+                                    "dest": {"index": f"copy{len(engine.indices)}"}}),
+            lambda: engine.delete_by_query("events", {"query": {"term": {"event_type": "error"}}}),
+        ]
+
+    for call in calls():
+        took = call()["took"]
+        assert isinstance(took, int) and took >= 0
+    ticks = iter(range(1000))
+    monkeypatch.setattr(E, "time", types.SimpleNamespace(monotonic=lambda: 0.75 * next(ticks)))
+    assert [call()["took"] for call in calls()] == [750] * 4

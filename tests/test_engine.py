@@ -1351,6 +1351,33 @@ def test_top_hits_score_sort_when_scored(engine):
         assert scores == sorted(scores, reverse=True)
 
 
+def test_top_hits_dotted_source_fields(spark):
+    """_source fields inside structs: `user.name` comes back under its
+    leaf, and two dotted fields sharing a leaf keep their full paths."""
+    e = Engine(spark)
+    e.create_index("people", spark.createDataFrame(
+        [(1, "a", ("ann", 30), ("oscar",), 5.0),
+         (2, "a", ("bob", 40), ("olga",), 7.0),
+         (3, "b", ("cid", 50), ("otto",), 1.0)],
+        "id long, grp string, user struct<name string, age int>, "
+        "owner struct<name string>, v double",
+    ), id_col="id")
+
+    def top(source):
+        r = e.search("people", {"size": 0, "aggs": {"g": {
+            "terms": {"field": "grp"},
+            "aggs": {"h": {"top_hits": {"size": 1, "sort": [{"v": "desc"}],
+                                        "_source": source}}}}}})
+        return {b["key"]: [h["_source"] for h in b["h"]["hits"]["hits"]]
+                for b in r["aggregations"]["g"]["buckets"]}
+
+    assert top(["user.name", "user.age"]) == {
+        "a": [{"name": "bob", "age": 40}], "b": [{"name": "cid", "age": 50}]}
+    assert top(["user.name", "owner.name", "id"]) == {
+        "a": [{"user.name": "bob", "owner.name": "olga", "id": 2}],
+        "b": [{"user.name": "cid", "owner.name": "otto", "id": 3}]}
+
+
 def test_significant_terms_jlh(engine, duck):
     """JLH arithmetic vs a hand-computed oracle: foreground = high-value
     events, background = all events, terms = event_type."""
